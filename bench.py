@@ -1,8 +1,10 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Any warehouse directory works (an ``sfX`` test warehouse or a
+``scripts/scale_ladder.py`` rung such as ``x7``). Prints ONE JSON line:
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+   "sf": X or null, "warehouse": "<directory name>", ...}
 """
 
 from __future__ import annotations
@@ -54,9 +56,21 @@ HEADLINE = [
 ]
 
 
+def warehouse_id(sf_dir: str) -> tuple[str, float | None]:
+    """(directory name as given, scale factor): the factor is parsed
+    only from an ``sf<float>`` name and is None for any other name."""
+    name = os.path.basename(sf_dir.rstrip("/"))
+    if name.startswith("sf"):
+        try:
+            return name, float(name[2:])
+        except ValueError:
+            pass
+    return name, None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
+    warehouse, sf = warehouse_id(sf_dir)
     spark = get_spark("newsflow-bench")
 
     names = [n for n in HEADLINE if n in QUERIES]
@@ -115,16 +129,17 @@ def main() -> None:
         if plan_sec is not None:
             detail[name]["plan"] = plan_sec
 
-    emit(timings, detail, sf, n_trials)
+    emit(timings, detail, sf, n_trials, warehouse=warehouse)
     spark.stop()
 
 
 def emit(
     timings: dict[str, float],
     detail: dict[str, dict],
-    sf: float,
+    sf: float | None,
     n_trials: int,
     detail_path: str | None = None,
+    warehouse: str | None = None,
 ) -> None:
     """Print the contract line; write the per-query detail to a file.
 
@@ -146,7 +161,9 @@ def emit(
     of per-query trial means vs the headline sum of mins, plus the
     trial count, so a reader can bound session noise without the
     detail file — a sum_mean/value ratio well above ~1.1 flags a
-    loaded box rather than a code change.
+    loaded box rather than a code change. "warehouse" is another
+    additive key: the warehouse directory's name, which is the only
+    identity a non-``sf`` directory has ("sf" is then null).
     """
     total = round(sum(timings.values()), 3)
     mean_total = round(sum(d["mean"] for d in detail.values()), 3)
@@ -158,6 +175,7 @@ def emit(
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
+                "warehouse": warehouse,
                 "spread": {
                     "sum_mean": mean_total,
                     "trials": n_trials,

@@ -30,7 +30,8 @@ scale are overwhelmingly tiny components (pairs + short chains from
 chained near-dups), so the fixpoint typically lands in 1-4 rounds
 and the bound is irrelevant there; `max_iter` (default 50, breaks
 early on convergence so the default costs nothing) is the explicit
-guard for adversarial-diameter graphs.
+guard for adversarial-diameter graphs: running out of rounds before
+the fixpoint raises rather than returning partial labels.
 
 Reference anchor: the reference's dedup surface stops at per-URL
 row dedup (dbt transformed.sql:16-24 ROW_NUMBER over url); cluster
@@ -66,7 +67,8 @@ def connected_components(
     Isolated nodes keep lab = id; empty ``nodes`` returns empty (the
     changed-count below is 0 on an empty frame, so the loop exits on
     round 1 — no NULL-sum trap). Exact fixpoint (not an
-    approximation), so it agrees with a transitive-closure oracle.
+    approximation), so it agrees with a transitive-closure oracle;
+    ``RuntimeError`` if ``max_iter`` rounds end before the fixpoint.
     """
     e = pairs.select(
         F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")
@@ -137,6 +139,14 @@ def connected_components(
         ).collect()[0][0]
         if n_changed == 0:
             break
+    else:
+        # out of rounds with labels still moving: they are not the
+        # fixpoint the contract promises, so refuse to return them
+        raise RuntimeError(
+            f"connected_components: no fixpoint after max_iter={max_iter} "
+            "rounds; the graph's diameter needs more rounds (about "
+            "diameter/2), raise max_iter"
+        )
     return lab.select("id", "lab")
 
 

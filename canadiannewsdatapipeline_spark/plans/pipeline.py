@@ -2,10 +2,13 @@
 
 Reference flow (ingest_news.py:76-189): per-source extract tasks ->
 XCom combine -> CSV -> COPY raw_news -> translate french -> dbt DAG.
-Here: per-source DataFrames (each a links->fetch->parse->enrich chain)
--> unionByName (S9; missing sources skip gracefully like the
-ALL_DONE trigger rule) -> validate -> id assignment -> translate
-(conditional overwrite) -> raw store -> model DAG -> marts.
+Here: per-source link pages -> unionByName (S9; missing sources skip
+gracefully like the ALL_DONE trigger rule) -> ONE links->fetch->parse
+->enrich chain for all sources -> validate -> id assignment ->
+translate (conditional overwrite) -> raw store -> model DAG -> marts.
+Every per-source step of the extract is partitioned by ``source`` or
+row-wise, so one lineage over the union is row-for-row the union of
+per-source lineages, with one plan branch instead of one per source.
 
 The serial id is the 1-based global rank under a deterministic
 ordering — not monotonically_increasing_id() — so reruns and oracles
@@ -54,26 +57,28 @@ def extract_source(
     keyword: str | None = "politics",
     n_articles: int = 10,
 ) -> DataFrame:
-    """One per-source extract task (ingest_news.py:115-150):
-    link page -> top-n article links -> fetch -> parse -> author
-    fan-out -> email enrichment -> 13-key records."""
+    """The extract task (ingest_news.py:115-150) for any number of
+    sources in one lineage: link pages -> top-n article links per
+    ``source`` -> fetch -> parse -> author fan-out -> email enrichment
+    -> 13-key records. The link dedup and the top-n cut are windows
+    partitioned by ``source`` and every later step is row-wise, so
+    ``pages`` may hold one source or the union of all of them
+    (``run_ingestion`` passes the union) with the same rows out."""
     links = extract_links(pages, keyword=keyword, top_n=n_articles)
     fetched = fetch_pages(links, fetcher)
-    parsed = parse_articles(fetched, fixture_or(parser))
+    parsed = parse_articles(fetched, parser)
     return finalize_records(enrich_author_emails(explode_authors(parsed)))
 
 
-def fixture_or(parser: ArticleParser) -> ArticleParser:
-    return parser
-
-
-def combine_sources(extracts: list[DataFrame]) -> DataFrame:
+def combine_sources(frames: list[DataFrame]) -> DataFrame:
     """S9/U1 (newsairflowtasks.py:27-52): union the successful
-    per-source extracts; an empty list is an error, missing sources
-    are simply absent (ALL_DONE semantics)."""
-    if not extracts:
+    per-source frames — link pages ahead of the one ``extract_source``
+    call in ``run_ingestion``, or per-source extracts; an empty list
+    is an error, missing sources are simply absent (ALL_DONE
+    semantics)."""
+    if not frames:
         raise ValueError("no successful source extracts")
-    return reduce(lambda a, b: a.unionByName(b), extracts)
+    return reduce(lambda a, b: a.unionByName(b), frames)
 
 
 def load_raw_news(combined: DataFrame, run_ts: str) -> DataFrame:
@@ -127,14 +132,15 @@ def run_ingestion(
     warehouse_dir: str | None = None,
     n_articles: int = 10,
 ) -> dict[str, DataFrame]:
-    """End-to-end News_Ingestion: extract each source, combine, load,
-    run the model DAG; returns every materialized frame. Eager from
-    the ``load_raw_news`` call on (see its docstring): the extract
-    lineage executes inside this function, not at first action on the
-    returned frames."""
-    extracts = []
-    for _, pages in sorted(source_pages.items()):
-        extracts.append(extract_source(pages, fetcher, parser, n_articles=n_articles))
-    raw = load_raw_news(combine_sources(extracts), run_ts)
+    """End-to-end News_Ingestion: combine the sources' link pages,
+    extract them in ONE lineage (see ``extract_source``), load, run the
+    model DAG; returns every materialized frame. ``source_pages`` maps
+    each source name to its link pages; an empty map raises
+    ``ValueError``. Eager from the ``load_raw_news`` call on (see its
+    docstring): the extract lineage executes inside this function, not
+    at first action on the returned frames."""
+    pages = combine_sources([p for _, p in sorted(source_pages.items())])
+    extracted = extract_source(pages, fetcher, parser, n_articles=n_articles)
+    raw = load_raw_news(extracted, run_ts)
     runner = news_model_dag(spark, warehouse_dir)
     return runner.run({"raw_news": raw})

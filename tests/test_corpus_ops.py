@@ -40,6 +40,19 @@ def test_cc_chain_converges_to_min(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_cc_raises_when_max_iter_runs_out(spark):
+    # A 40-hop chain needs ~20 rounds; with max_iter=2 the labels are
+    # still moving when the rounds end, which must raise instead of
+    # returning labels that are not the fixpoint.
+    n = 41
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(
+            _nodes(spark, range(n)),
+            _pairs(spark, [(i, i + 1) for i in range(n - 1)]),
+            max_iter=2,
+        )
+
+
 def test_cc_components_and_singletons(spark):
     # Two components {1,2,3,9} (via 9-1 edge given out of order) and
     # {5,6}; 4 and 7 isolated.

@@ -13,6 +13,8 @@ import pytest
 
 from canadiannewsdatapipeline_spark.queries import QUERIES, oracle_sql_map, query_map
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -69,7 +71,7 @@ def test_no_registered_query_emits_nonscalar_columns(spark, sf_dir):
 def test_every_registered_query_is_documented():
     # the judge reads COVERAGE.md line by line — a registered query the
     # doc never mentions is invisible coverage
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(os.path.join(REPO, "COVERAGE.md")).read()
     missing = sorted(name for name in QUERIES if f"`{name}`" not in text)
     assert not missing, f"queries absent from COVERAGE.md: {missing}"
 
@@ -198,7 +200,7 @@ def test_driver_entry_and_bench_contract():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_under_test", "/root/repo/__spark_entry__.py"
+        "spark_entry_under_test", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -209,7 +211,7 @@ def test_driver_entry_and_bench_contract():
     assert o.keys() == oracle_sql_map().keys()
 
     bench_spec = importlib.util.spec_from_file_location(
-        "bench_under_test", "/root/repo/bench.py"
+        "bench_under_test", os.path.join(REPO, "bench.py")
     )
     bench = importlib.util.module_from_spec(bench_spec)
     bench_spec.loader.exec_module(bench)
@@ -267,7 +269,7 @@ def test_bench_emit_prints_exactly_one_json_line(tmp_path, capsys):
     import json as _json
 
     spec = importlib.util.spec_from_file_location(
-        "bench_emit_under_test", "/root/repo/bench.py"
+        "bench_emit_under_test", os.path.join(REPO, "bench.py")
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
@@ -278,7 +280,9 @@ def test_bench_emit_prints_exactly_one_json_line(tmp_path, capsys):
         "q_slow": {"min": 2.0, "mean": 2.5, "n": 3},
     }
     out_file = tmp_path / "BENCH_DETAIL.json"
-    bench.emit(timings, detail, sf=0.1, n_trials=3, detail_path=str(out_file))
+    assert bench.warehouse_id("/data/sf0.1/") == ("sf0.1", 0.1)
+    bench.emit(timings, detail, sf=0.1, n_trials=3, detail_path=str(out_file),
+               warehouse="sf0.1")
 
     cap = capsys.readouterr()
     assert cap.err == "", "bench must print NOTHING to stderr"
@@ -294,6 +298,24 @@ def test_bench_emit_prints_exactly_one_json_line(tmp_path, capsys):
     # additive noise-legibility key
     assert parsed["spread"]["sum_mean"] == 2.62
     assert parsed["spread"]["trials"] == 3
+    assert parsed["warehouse"] == "sf0.1"
     # detail lives in the file, not in any printed stream
     on_disk = _json.loads(out_file.read_text())
     assert on_disk["queries_detail"] == detail
+
+    # a ladder rung (or any non-sf directory) is recorded by name, with
+    # a null sf, and every contract key is still there
+    name, sf = bench.warehouse_id("/data/ladder/x7")
+    assert (name, sf) == ("x7", None)
+    bench.emit(timings, detail, sf=sf, n_trials=3, detail_path=str(out_file),
+               warehouse=name)
+    cap = capsys.readouterr()
+    assert cap.err == ""
+    lines = [ln for ln in cap.out.splitlines() if ln.strip()]
+    assert len(lines) == 1, f"expected exactly one stdout line, got {lines}"
+    rung = _json.loads(lines[0])
+    assert rung["sf"] is None and rung["warehouse"] == "x7"
+    assert set(rung) == set(parsed)
+    assert {k: v for k, v in rung.items() if k not in ("sf", "warehouse")} == {
+        k: v for k, v in parsed.items() if k not in ("sf", "warehouse")
+    }
